@@ -22,7 +22,7 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from tests.slow_tier import SLOW_TESTS  # noqa: E402
+from tests.slow_tier import SLOW_TESTS, run_slow_from_env  # noqa: E402
 from usgs_lidar_spark.schemas import TABLE_NAMES  # noqa: E402
 from usgs_lidar_spark.session import get_spark  # noqa: E402
 
@@ -40,8 +40,8 @@ def pytest_addoption(parser):
 
 
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get(
-        "SPARK_GRAFT_RUN_SLOW"
+    if config.getoption("--runslow") or run_slow_from_env(
+        os.environ.get("SPARK_GRAFT_RUN_SLOW")
     ):
         return
     skip = pytest.mark.skip(

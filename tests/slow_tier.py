@@ -12,6 +12,16 @@ Every skipped test remains the authority for what it pins; the
 driver's own DuckDB oracle replays the query surface regardless.
 """
 
+from __future__ import annotations
+
+
+def run_slow_from_env(value: str | None) -> bool:
+    """``SPARK_GRAFT_RUN_SLOW`` enables the slow tier only when set to
+    1/true/yes (any case); unset, empty, ``0`` and ``false`` keep it
+    skipped."""
+    return (value or "").strip().lower() in ("1", "true", "yes")
+
+
 SLOW_TESTS = frozenset({
     "tests/test_empty_inputs.py::test_every_query_runs_on_empty_tables",
     "tests/test_empty_inputs.py::test_every_query_runs_on_one_row_tables",

@@ -17,6 +17,8 @@ from usgs_lidar_spark.operators.spatial import (
 )
 from usgs_lidar_spark.operators.voxel import voxel_downsample
 
+from tests.test_graph_contraction import _coalescing_off
+
 
 def test_voxel_downsample_golden(spark):
     """Reference semantics: keys = floor((p - min)/res); barycenter = mean
@@ -1056,31 +1058,45 @@ def test_connected_components_chain_and_singleton(spark):
     assert out[4]["cluster_size"] == 1 and out[4]["is_kept"]
 
 
-def test_connected_components_deep_chain_converges(spark):
-    """A 12-vertex path needs ~diameter rounds — pins the loop + the
-    convergence early-exit (max_iter default must cover it)."""
-    from usgs_lidar_spark.operators.graph import connected_components
-
-    n = 12
+def _cc_path(spark, n):
     verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["src", "dst"]
     )
+    return verts, edges
+
+
+def test_connected_components_deep_chain_converges(spark):
+    """In the default layout AQE coalesces a 12-vertex path into one
+    partition and the local contraction labels it alone: zero rounds.
+    With coalescing off a 16-vertex path spreads over the partitions
+    and its contracted graph needs ~diameter/2 rounds — pins the loop +
+    the convergence early-exit (max_iter default must cover it)."""
+    from usgs_lidar_spark.operators.graph import connected_components
+
     stats: dict = {}
-    out = connected_components(verts, edges, stats=stats).collect()
+    out = connected_components(*_cc_path(spark, 12), stats=stats).collect()
+    assert all(r["cluster_id"] == 0 for r in out) and len(out) == 12
+    assert stats == {"rounds": 0, "converged": True, "algorithm": "minlabel"}
+
+    n = 16
+    stats = {}
+    with _coalescing_off(spark):
+        out = connected_components(*_cc_path(spark, n), stats=stats).collect()
     assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
-    # Diagnostics out-param: a 12-path needs ~diameter rounds under
-    # min-label; converged must be reported.
+    # The contracted graph of an n-path has diameter < n, and each round
+    # covers two hops.
     assert stats["converged"] and stats["algorithm"] == "minlabel"
-    assert 6 <= stats["rounds"] <= 13
+    assert 1 <= stats["rounds"] <= n // 2 + 1
 
 
 def test_connected_components_star_beats_minlabel_on_path(spark):
-    """High-diameter input: a 15-vertex path. In 5 rounds min-label can
-    only propagate ~5 hops (must hit max_iter and warn, per the
-    convergence contract); the alternating large/small-star contraction
-    converges within the same budget and labels every vertex 0."""
-    import pytest
+    """High-diameter input. In the default layout the contraction
+    resolves a 15-vertex path in zero rounds. With coalescing off a
+    30-vertex path leaves a contracted path that min-label cannot cover
+    in 6 rounds (must hit max_iter and warn, per the convergence
+    contract); the alternating large/small-star contraction converges
+    within the same budget and labels every vertex 0."""
     import warnings as _w
 
     from usgs_lidar_spark.operators.graph import (
@@ -1088,26 +1104,33 @@ def test_connected_components_star_beats_minlabel_on_path(spark):
         connected_components,
     )
 
-    n = 15
-    verts = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["src", "dst"]
-    )
-
-    with pytest.warns(ConvergenceWarning):
-        partial = connected_components(verts, edges, max_iter=5).collect()
-    assert any(r["cluster_id"] != 0 for r in partial)  # genuinely partial
-
-    with pytest.raises(RuntimeError):
-        connected_components(
-            verts, edges, max_iter=5, on_unconverged="raise"
-        )
-
+    verts, edges = _cc_path(spark, 15)
+    stats: dict = {}
     with _w.catch_warnings():
-        _w.simplefilter("error")  # star must NOT warn: it converges
+        _w.simplefilter("error", ConvergenceWarning)
         out = connected_components(
-            verts, edges, max_iter=5, algorithm="star"
+            verts, edges, max_iter=5, stats=stats
         ).collect()
+    assert len(out) == 15 and all(r["cluster_id"] == 0 for r in out)
+    assert stats["rounds"] == 0 and stats["converged"]
+
+    n = 30
+    verts, edges = _cc_path(spark, n)
+    with _coalescing_off(spark):
+        with pytest.warns(ConvergenceWarning):
+            partial = connected_components(verts, edges, max_iter=6).collect()
+        assert any(r["cluster_id"] != 0 for r in partial)  # genuinely partial
+
+        with pytest.raises(RuntimeError):
+            connected_components(
+                verts, edges, max_iter=6, on_unconverged="raise"
+            )
+
+        with _w.catch_warnings():
+            _w.simplefilter("error")  # star must NOT warn: it converges
+            out = connected_components(
+                verts, edges, max_iter=6, algorithm="star"
+            ).collect()
     assert len(out) == n and all(r["cluster_id"] == 0 for r in out)
 
 
@@ -6454,6 +6477,30 @@ def test_shingle_pairs_table_matches_expression_form(spark):
             )
             assert e == a, (cap, frac)
         assert len(a) > 0
+
+
+def test_shingle_string_offsets_bound_int32():
+    """`shingle_pairs_table` builds its string column over int32 offsets:
+    a segment of exactly 2**31 - 1 bytes fits, one byte more raises
+    instead of wrapping (synthetic lengths, no allocation of the bytes)."""
+    import numpy as np
+
+    from usgs_lidar_spark.operators.minhash_kernel import (
+        _MAX_STRING_BYTES,
+        _string_offsets,
+    )
+
+    assert _MAX_STRING_BYTES == 2**31 - 1
+    offsets = _string_offsets(np.array([3, 5, 0, 8], dtype=np.int64))
+    assert offsets.dtype == np.int32
+    assert offsets.tolist() == [0, 3, 8, 8, 16]
+    assert _string_offsets(np.array([], dtype=np.int64)).tolist() == [0]
+    fits = _string_offsets(np.array([2**30, 2**30 - 1], dtype=np.int64))
+    assert int(fits[-1]) == 2**31 - 1
+    with pytest.raises(ValueError, match="int32 string offsets"):
+        _string_offsets(np.array([2**30, 2**30], dtype=np.int64))
+    with pytest.raises(ValueError, match="int32 string offsets"):
+        _string_offsets(np.full(300, 8 * 2**20, dtype=np.int64))
 
 
 def test_minhash_lsh_arrow_expr_parity(spark):

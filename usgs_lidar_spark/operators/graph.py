@@ -6,26 +6,38 @@ operators/dedup.py); this is the north-star extension that turns pairwise
 near-dup output into the thing a training-data pipeline actually keeps:
 one canonical document per duplicate cluster.
 
-Spark design — iterative min-label propagation:
-  * state is (id, label); label converges to the component's min id;
-  * one round = propagate labels across edges (equi-join) + min-agg.
-    Rounds needed = component diameter, which for near-dup clusters is
-    tiny (duplicates of a common source are mutually similar — diameter
-    1-3 in practice). `max_iter` bounds pathological chains;
+Spark design — local contraction, then min-label rounds over what is
+left (Łącki et al., "Connected Components at Scale via Local
+Contractions", arXiv:1807.10727):
+  * the edge list is rebalanced on its smaller endpoint, so a star
+    around its min id lands in one partition at any scale, and AQE
+    coalesces a small pair graph into a single partition;
+  * one vectorized union-find mapInArrow pass per partition labels
+    every vertex the partition touches with its partition-local
+    component min (`_union_find_kernel`);
+  * those rows are grouped by id and pinned; ONE count of the vertices
+    that got more than one local label is the only action. Zero means
+    the local labels are already final — the common dedup case, zero
+    rounds;
+  * otherwise the CONTRACTED graph — each such vertex's local labels
+    linked to their minimum — runs iterative min-label propagation
+    (`_minlabel_rounds`): one round = propagate labels across edges
+    (equi-join) + min-agg, ending in a checkpoint and a scalar
+    convergence count (the driver never sees the data). `max_iter`
+    bounds pathological chains of partition-spanning components;
   * every round ends in localCheckpoint(): iterative DataFrame loops
     otherwise stack exponentially-growing lineage, and the convergence
     check re-executes it. On a cluster with a checkpoint dir configured,
-    reliable checkpoint() is the drop-in upgrade;
-  * convergence = zero labels changed (one count() action per round —
-    the driver only sees a scalar, never the data);
-  * the edge list is made undirected + distinct once, up front.
+    reliable checkpoint() is the drop-in upgrade.
+
+Labels are "min reachable id" either way: the global component min is
+the local min of every partition piece it lies in, and the contracted
+graph re-joins the pieces of a component split across partitions.
 
 The alternating large-star/small-star algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond") drops round count to
-O(log^2 n) for high-diameter graphs; min-label propagation is the default
-because dedup graphs are shallow and each round is a single cheap
-shuffle. ``algorithm="star"`` switches to the alternating form for
-high-diameter inputs (long chain-shaped near-dup drift, web link graphs).
+O(log^2 n) for high-diameter graphs without the contraction;
+``algorithm="star"`` selects it.
 """
 
 from __future__ import annotations
@@ -61,14 +73,15 @@ def _make_ckpt(checkpoint_mode: str):
         )
 
     def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-        # eager=False defers materialization to the frame's FIRST action
-        # (lineage is still severed there): a loop that follows every
-        # pin with its own action anyway — the convergence count — can
-        # ride both on ONE job instead of paying a separate
-        # materialization job per round (guide §2.6: sequential driver
-        # round-trips are the iterative tax). Only safe where an action
-        # per round is guaranteed; a deferred pin consumed only by the
-        # NEXT round's plan would let analysis-time lineage regrow.
+        # eager=False defers only the FINAL stage to the frame's first
+        # action (lineage is still severed there): under AQE the call
+        # itself runs every upstream shuffle stage as its own job while
+        # it plans the frame. A loop that follows every pin with its own
+        # action anyway — the convergence count — saves the one job
+        # that would otherwise re-read an eagerly written pin. Only safe
+        # where an action per pin is guaranteed; a deferred pin consumed
+        # only by the NEXT round's plan would let analysis-time lineage
+        # regrow.
         if checkpoint_mode == "reliable":
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
@@ -95,14 +108,14 @@ def _minlabel_rounds(
     all-no-op round: each row's label from just BEFORE the round's
     final hop rides through that hop as a tagged column (min ignoring
     the message rows' NULLs), and "final hop changed nothing" is
-    checked by a filter-count over the already-checkpointed result.
-    One propagation hop is a deterministic function of the (id, label)
-    state and labels only ever decrease, so a no-op hop means the
-    pre-hop state was already a FIXED POINT — every later hop is also
-    a no-op, which is exactly label convergence. (The seed label frame
-    covers every edge endpoint — connected_components iterates over
-    the touched-vertex semi-join — so no id can first appear
-    mid-iteration and silently dodge the count; a NULL ``__old`` row,
+    checked by a filter-count over the round's pin. One propagation
+    hop is a deterministic function of the (id, label) state and
+    labels only ever decrease, so a no-op hop means the pre-hop state
+    was already a FIXED POINT — every later hop is also a no-op, which
+    is exactly label convergence. (The seed label frame covers every
+    edge endpoint — connected_components seeds it from the contracted
+    graph's endpoints — so no id can first appear mid-iteration and
+    silently dodge the count; a NULL ``__old`` row,
     were one possible, would keep the pre-r6 "appearing is not
     changing" convention.) A diameter-1 pair graph — the common dedup
     shape: star clusters around their min id — therefore converges in
@@ -133,8 +146,9 @@ def _minlabel_rounds(
             F.lit(None).cast(label_type).alias("__old"),
         )
         # Lazy pin: the convergence count below is the round's
-        # guaranteed action, so it materializes the checkpoint and
-        # counts in ONE job (two jobs per round before).
+        # guaranteed action, so the pin's final stage and the count
+        # share one job (the upstream shuffle stages still run as their
+        # own jobs when the pin is planned; see `_make_ckpt`).
         new_labels = ckpt(
             tagged.select("id", "label", "__old")
             .union(msgs)
@@ -177,9 +191,11 @@ def _star_rounds(
     """
     from pyspark.sql import Window
 
-    # Self-loops carry no information; drop up front. Eager: round 1's
-    # delta count references this pin from four branches (both sym
-    # orientations, both exceptAll legs) — see the bidir pin note.
+    # Self-loops carry no information; drop up front. Kept EAGER (round
+    # 17 audit): round 1's delta count references this pin from four
+    # branches (both sym orientations, both exceptAll legs), and a lazy
+    # pin would let them race to compute the caller's whole pair-build
+    # lineage concurrently before the cache fills.
     edges = ckpt(bidir.filter(F.col("u") != F.col("v")).distinct())
     converged = False
     rounds = 0
@@ -240,6 +256,121 @@ def _star_rounds(
     return ckpt(labels), converged, rounds
 
 
+def _union_find_kernel(batches):
+    """mapInArrow kernel: the connected components of ONE partition's
+    edge rows (u, v). Emits (id, label) for every id the partition
+    touches, label = the min id of its partition-local component.
+
+    Vectorized union-find: ids map to dense indices via ``np.unique``
+    (sorted, so the min index is the min id, for any orderable Arrow
+    type). Each pass hooks every live edge's two roots to the smaller
+    one (``np.minimum.at`` both ways), then pointer-jumps
+    (``lab = lab[lab]``) until every index points at its root; an edge
+    whose endpoints share a root is done for good and leaves the live
+    set. Duplicate edges, both orientations and self-loops need no
+    pre-pass. Python loops only over passes, never over edges."""
+    import numpy as np
+    import pyarrow as pa
+
+    parts = [b for b in batches if b.num_rows]
+    if not parts:
+        return
+    ends = pa.concat_arrays(
+        [b.column(0) for b in parts] + [b.column(1) for b in parts]
+    )
+    n_edges = len(ends) // 2
+    _, first, inv = np.unique(
+        ends.to_numpy(zero_copy_only=False),
+        return_index=True,
+        return_inverse=True,
+    )
+    a, b = inv[:n_edges], inv[n_edges:]
+    lab = np.arange(first.size)
+    while True:
+        ra, rb = lab[a], lab[b]
+        live = ra != rb
+        if not live.any():
+            break
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(lab, ra, rb)
+        np.minimum.at(lab, rb, ra)
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+    ids = ends.take(pa.array(first))
+    yield pa.RecordBatch.from_arrays(
+        [ids, ids.take(pa.array(lab))], names=["id", "label"]
+    )
+
+
+def _contract_rounds(
+    edges: DataFrame, max_iter: int, ckpt
+) -> tuple[DataFrame, bool, int]:
+    """Connected components of the (u, v) edge list by local contraction.
+    Returns ((id, label) for every non-NULL endpoint, converged,
+    rounds over the contracted graph).
+
+    Rebalancing on ``least(u, v)`` — with no partition count, so AQE
+    sizes it — keeps a star around its min id in one partition and
+    coalesces a small pair graph into ONE partition, where the kernel
+    resolves every component and no round runs. A skewed key is split,
+    which stays correct: the contracted graph re-joins the pieces.
+    (`spread_for_kernel`'s round-robin would scatter the stars.)"""
+    from pyspark.sql.types import StructField, StructType
+
+    id_type = edges.select(F.least("u", "v")).schema[0].dataType
+    keyed = (
+        edges.where(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .select(
+            F.col("u").cast(id_type),
+            F.col("v").cast(id_type),
+            F.least("u", "v").cast(id_type).alias("__key"),
+        )
+        .hint("rebalance", "__key")
+        .select("u", "v")
+    )
+    local = keyed.mapInArrow(
+        _union_find_kernel,
+        StructType(
+            [StructField("id", id_type), StructField("label", id_type)]
+        ),
+    )
+    # Lazy pin: the count below is its guaranteed action.
+    grouped = ckpt(
+        local.groupBy("id").agg(
+            F.min("label").alias("label"),
+            F.collect_set("label").alias("__local"),
+        ),
+        eager=False,
+    )
+    split = grouped.filter(F.size("__local") > 1)
+    if split.count() == 0:
+        return grouped.select("id", "label"), True, 0
+    # Contracted graph: every local label of a split vertex linked to
+    # the vertex's min label, both orientations. Left unpinned: it only
+    # re-reads `grouped`'s pin, and an eager pin here added ~25 % jobs
+    # per round at equal wall time (16-vertex path, coalescing off).
+    links = split.select(
+        F.explode("__local").alias("u"), F.col("label").alias("v")
+    ).filter(F.col("u") != F.col("v"))
+    bidir = links.union(
+        links.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).distinct()
+    seed = bidir.select(F.col("u").alias("id"), F.col("u").alias("label"))
+    contracted, converged, rounds = _minlabel_rounds(
+        seed, bidir, max_iter, ckpt
+    )
+    contracted = contracted.select(
+        F.col("id").alias("__lid"), F.col("label").alias("__root")
+    )
+    labels = grouped.join(
+        contracted, grouped["label"] == contracted["__lid"], "left"
+    ).select("id", F.coalesce("__root", "label").alias("label"))
+    return labels, converged, rounds
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -257,10 +388,15 @@ def connected_components(
 
     Vertices absent from the edge list keep themselves as cluster_id
     (singleton clusters), so the output has exactly one row per vertex.
+    An edge with a NULL endpoint links nothing; an edge endpoint missing
+    from ``vertices`` still links its neighbours (and can be their min
+    label) but gets no row of its own.
 
-    ``algorithm``: "minlabel" (default; rounds = component diameter —
-    right for shallow dedup graphs) or "star" (alternating large/small
-    star, O(log^2 n) rounds — right for high-diameter graphs).
+    ``algorithm``: "minlabel" (default; local union-find contraction per
+    partition, then min-label rounds over the contracted graph only —
+    zero rounds when no component straddles partitions) or "star"
+    (alternating large/small star, O(log^2 n) rounds — right for
+    high-diameter graphs).
 
     ``on_unconverged``: "warn" (default) or "raise" — hitting ``max_iter``
     with labels still changing means the output is PARTIALLY propagated
@@ -269,7 +405,8 @@ def connected_components(
 
     ``stats``: optional dict populated in place with {"rounds", "converged",
     "algorithm"} — convergence diagnostics for monitoring/experiments
-    without an extra action.
+    without an extra action. For "minlabel", ``rounds`` (and
+    ``max_iter``) count rounds over the contracted graph.
 
     ``checkpoint_mode``: ``"local"`` (default) or ``"reliable"`` — the
     same durability toggle as `pagerank_fixed` (see `_make_ckpt`): CC
@@ -280,37 +417,20 @@ def connected_components(
     bit-identical either way.
     """
     ckpt = _make_ckpt(checkpoint_mode)
-    labels = vertices.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("label")
-    )
+    ids = vertices.select(F.col(id_col).alias("id"))
     fwd = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    rev = edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
-    # Kept EAGER (round 17 audit): the round-1 count job references
-    # this pin from several branches at once (touched, seed's semi
-    # join, both hops' message joins); a lazy pin would let those
-    # branches race to compute the whole pair-build lineage
-    # concurrently before the cache fills — N-times the heaviest
-    # subtree for one saved persist job is the wrong trade at every
-    # scale.
-    bidir = ckpt(fwd.union(rev).distinct())
 
     if algorithm == "minlabel":
-        # Iterate ONLY over vertices with at least one edge: a dedup pair
-        # graph touches a tiny fraction of a 100 TB corpus, and dragging
-        # the |V|-sized singleton majority through every round's shuffle
-        # was pure waste — they are their own components by definition
-        # and rejoin map-only at the end. (bidir is symmetric, so "u"
-        # covers every endpoint.)
-        touched = bidir.select(F.col("u").alias("id")).distinct()
-        seed = labels.join(touched, "id", "left_semi")
-        iter_labels, converged, rounds = _minlabel_rounds(
-            seed, bidir, max_iter, ckpt
+        labels, converged, rounds = _contract_rounds(fwd, max_iter, ckpt)
+        labels = ids.join(labels, "id", "left").select(
+            "id", F.coalesce("label", "id").alias("label")
         )
-        singletons = labels.join(touched, "id", "left_anti")
-        labels = iter_labels.unionByName(singletons)
     elif algorithm == "star":
+        rev = edges.select(
+            F.col(dst_col).alias("u"), F.col(src_col).alias("v")
+        )
         labels, converged, rounds = _star_rounds(
-            vertices.select(F.col(id_col).alias("id")), bidir, max_iter, ckpt
+            ids, fwd.union(rev), max_iter, ckpt
         )
     else:
         raise ValueError(f"unknown algorithm: {algorithm!r}")
@@ -387,8 +507,8 @@ def collapse_clusters_keep_best(
     signal plugs in: length, a classifier score, an integer quality
     rank.
 
-    Plan: same min-label-propagation components as `collapse_clusters`
-    (labels-only shuffle, per-round checkpoint), then ONE extra
+    Plan: same contracted components as `collapse_clusters` (one
+    union-find pass, rounds only over the contracted graph), then ONE extra
     cluster-keyed reduction — a max_by-style aggregate of the
     (score, -id) pair per cluster joined back on cluster_id (one row
     per cluster, so the join is cluster-count-sized: AQE broadcasts it

@@ -246,6 +246,25 @@ def shingle_codes_table(
     return c.mapInArrow(kernel, out_schema)
 
 
+#: Largest total byte size one Arrow string array's int32 offsets hold.
+_MAX_STRING_BYTES = 2**31 - 1
+
+
+def _string_offsets(lens):
+    """int32 Arrow string offsets over the per-string byte lengths
+    ``lens``. Raises ValueError when the strings' total size does not
+    fit int32 offsets, instead of letting the offsets wrap."""
+    np = _np()
+    offsets = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    if offsets[-1] > _MAX_STRING_BYTES:
+        raise ValueError(
+            f"shingle segment of {int(offsets[-1])} bytes exceeds the "
+            f"{_MAX_STRING_BYTES}-byte limit of int32 string offsets"
+        )
+    return offsets.astype(np.int32)
+
+
 def shingle_pairs_table(
     df: DataFrame, text_col: str, id_col: str, k: int = 8
 ) -> DataFrame:
@@ -292,8 +311,10 @@ def shingle_pairs_table(
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_out = to_arrow_schema(out_schema)
-        # Flush segments well under Arrow's 2 GiB string-buffer cap so
-        # one huge input batch can never overflow the int32 offsets.
+        # Flush segments well under Arrow's 2 GiB string-buffer cap; a
+        # document that would push a segment past the int32 offsets
+        # flushes the segment first (`_string_offsets` raises if the
+        # document alone cannot fit).
         flush_bytes = 256 * 1024 * 1024
 
         for batch in batches:
@@ -308,11 +329,9 @@ def shingle_pairs_table(
             pending = 0
 
             def flush():
-                lens = np.concatenate(len_parts)
-                offsets = np.zeros(lens.size + 1, dtype=np.int32)
-                np.cumsum(lens, out=offsets[1:])
+                offsets = _string_offsets(np.concatenate(len_parts))
                 shingles = pa.StringArray.from_buffers(
-                    lens.size,
+                    offsets.size - 1,
                     pa.py_buffer(offsets.tobytes()),
                     pa.py_buffer(b"".join(data_parts)),
                 )
@@ -342,20 +361,24 @@ def shingle_pairs_table(
                         np.ascontiguousarray(win).view(np.uint64).ravel()
                     )
                     n = codes.size
-                    data_parts.append(codes.tobytes())
-                    len_parts.append(np.full(n, k, dtype=np.int64))
-                    pending += n * k
+                    blob = codes.tobytes()
+                    lens = np.full(n, k, dtype=np.int64)
                 else:
                     # generic fallback: exact codepoint slicing
                     uniq = sorted({t[i : i + k] for i in range(len(t) - k + 1)})
                     enc = [s.encode("utf-8") for s in uniq]
                     n = len(enc)
                     blob = b"".join(enc)
-                    data_parts.append(blob)
-                    len_parts.append(
-                        np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
+                    lens = np.fromiter(
+                        (len(e) for e in enc), dtype=np.int64, count=n
                     )
-                    pending += len(blob)
+                if counts and pending + len(blob) > _MAX_STRING_BYTES:
+                    yield flush()
+                    row_idx, counts, data_parts, len_parts = [], [], [], []
+                    pending = 0
+                data_parts.append(blob)
+                len_parts.append(lens)
+                pending += len(blob)
                 row_idx.append(row)
                 counts.append(n)
                 if pending >= flush_bytes:
