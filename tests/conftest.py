@@ -22,7 +22,11 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from tests.slow_tier import SLOW_TESTS, run_slow_from_env  # noqa: E402
+from tests.slow_tier import (  # noqa: E402
+    SLOW_TESTS,
+    named_node_ids,
+    run_slow_from_env,
+)
 from usgs_lidar_spark.schemas import TABLE_NAMES  # noqa: E402
 from usgs_lidar_spark.session import get_spark  # noqa: E402
 
@@ -47,8 +51,15 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="slow tier — run with --runslow or SPARK_GRAFT_RUN_SLOW=1"
     )
+    # A slow test named in full on the command line is run, not skipped.
+    # Ids are taken relative to the repo, so the tier holds whichever
+    # directory pytest runs from.
+    skipped = SLOW_TESTS - named_node_ids(
+        config.args, config.invocation_params.dir, REPO
+    )
     for item in items:
-        if item.nodeid in SLOW_TESTS:
+        rel = item.path.relative_to(REPO).as_posix()
+        if f"{rel}::{item.nodeid.partition('::')[2]}" in skipped:
             item.add_marker(skip)
 
 

@@ -14,12 +14,33 @@ driver's own DuckDB oracle replays the query surface regardless.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 
 def run_slow_from_env(value: str | None) -> bool:
     """``SPARK_GRAFT_RUN_SLOW`` enables the slow tier only when set to
     1/true/yes (any case); unset, empty, ``0`` and ``false`` keep it
     skipped."""
     return (value or "").strip().lower() in ("1", "true", "yes")
+
+
+def named_node_ids(args, invocation_dir: Path, root: Path) -> set[str]:
+    """The node ids named in full (``path::name``) among the command-line
+    ``args``, rewritten relative to ``root``. A slow test named this way
+    runs without ``--runslow``."""
+    named = set()
+    for arg in args:
+        path, sep, rest = str(arg).partition("::")
+        if not sep:
+            continue
+        try:
+            rel = (Path(invocation_dir) / path).resolve().relative_to(
+                Path(root).resolve()
+            )
+        except ValueError:
+            continue
+        named.add(f"{rel.as_posix()}::{rest}")
+    return named
 
 
 SLOW_TESTS = frozenset({

@@ -14,9 +14,25 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from usgs_lidar_spark import schemas
 from usgs_lidar_spark.schemas import TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Tables read with their declared schema, so no parquet footer job runs
+#: to infer it. ``events`` keeps inference: how ``ts`` is converted
+#: depends on the type the file stores.
+DECLARED_SCHEMAS = {
+    "region": schemas.REGION,
+    "nation": schemas.NATION,
+    "customer": schemas.CUSTOMER,
+    "supplier": schemas.SUPPLIER,
+    "part": schemas.PART,
+    "orders": schemas.ORDERS,
+    "lineitem": schemas.LINEITEM,
+    "documents": schemas.DOCUMENTS,
+    "embeddings": schemas.EMBEDDINGS,
+}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -27,8 +43,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     to TimestampNTZ at microsecond precision here. This is a metadata-only
     projection — it does not break column pruning or predicate pushdown on
     the other columns.
+
+    Tables in ``DECLARED_SCHEMAS`` are read with that schema and fire no
+    job; any other name is read with schema inference.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read
+    if name in DECLARED_SCHEMAS:
+        reader = reader.schema(DECLARED_SCHEMAS[name])
+    df = reader.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer division, NOT `/1000` + cast: epoch nanos (~1.7e18) exceed
         # a double's 2^53 exact-integer range, so float division corrupts

@@ -23,10 +23,17 @@ The same quiet-box bench also shows the r16 kernels at or below their
 8-core walls at 32 cores (decon_hotbench 0.65 s vs the driver's noisy
 5.78 s reading), i.e. the "kernels regress at high core count" signal
 in PERF_r16 was box contention (pre-bench calibration rider 0.912 s =
-3.5x the quiet band), not task fan-out. The fan-out cost that IS real
-— per-task closure payloads — is addressed by shipping the kernels'
-matrices through ``sc.broadcast`` (deserialized once per reused worker,
-not once per task) at the call sites that carry non-trivial state.
+3.5x the quiet band), not task fan-out.
+
+The per-task fan-out cost that was measured is not the closure
+payload. A cProfile of a reused worker (CPython 3.11, 4-core VM) put
+0.90 s of a 1.11 s identity ``mapInArrow`` task in
+``importlib.invalidate_caches()``: every task re-read the central
+directories of the pyspark and py4j zips, 150-250 ms per task. The
+engine's worker daemon (``worker_daemon.py``, set by
+``session.get_spark``) re-reads an archive only if it changed. Large
+kernel matrices still travel through ``sc.broadcast``, deserialized
+once per reused worker rather than once per task.
 """
 
 from __future__ import annotations

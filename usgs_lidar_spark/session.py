@@ -17,6 +17,10 @@ from pyspark.sql import SparkSession
 #: ~2-3x total executor cores (or left to AQE coalescing, which is enabled).
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+#: The directory that holds the ``usgs_lidar_spark`` package. Python
+#: workers need it on their path to start the engine's worker daemon.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "usgs-lidar-spark",
@@ -45,6 +49,10 @@ def get_spark(
         cluster the relevant knobs are runtime.bloomFilter.
         creationSideThreshold (dim build cap) and
         applicationSideScanSizeThreshold (fact floor, default 10GB).
+      * ``spark.python.daemon.module`` — the engine's worker daemon
+        (``worker_daemon.py``): Python tasks stop re-reading the
+        pyspark and py4j zips. ``spark.executorEnv.PYTHONPATH`` puts
+        the package root first so the workers can import it.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -64,6 +72,13 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "usgs_lidar_spark.worker_daemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(
+                p for p in (PACKAGE_ROOT, os.environ.get("PYTHONPATH")) if p
+            ),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
